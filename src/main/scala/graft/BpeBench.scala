@@ -16,7 +16,7 @@ package graft
 object BpeBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = graft.core.Env.positiveInt("SPARK_GRAFT_CPUS").getOrElse(8).toString
     val nMerges = sys.env.get("SPARK_GRAFT_BPE_MERGES").map(_.toInt).getOrElse(50)
     val synthN = sys.env.get("SPARK_GRAFT_BPE_SYNTH").map(_.toLong).getOrElse(0L)
     // synthetic word length: the full recount's per-merge cost scales

@@ -15,7 +15,7 @@ object RecallProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = graft.core.GraftSession.builder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")).getOrCreate()
+      graft.core.Env.positiveInt("SPARK_GRAFT_CPUS").getOrElse(8).toString).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val exact = Similarity.cosineTopK(emb)

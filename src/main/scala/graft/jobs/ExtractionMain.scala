@@ -20,14 +20,15 @@ object ExtractionMain {
     require(args.length >= 2, "usage: ExtractionMain <baseUrl> <lakeRoot> [loadDate]")
     val Array(baseUrl, lakeRoot) = args.take(2)
     val loadDate = args.lift(2).getOrElse(LocalDate.now().toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = graft.core.Env.positiveInt("SPARK_GRAFT_CPUS").getOrElse(4).toString
     val spark = graft.core.GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val client = new RestClient(new JavaHttpTransport(), RetryPolicy(minIntervalMillis = 1100L))
     val job = new ExtractionJob(spark, client, new LakeWriter(lakeRoot), baseUrl)
     val results = job.run(Endpoints.fullLoad, loadDate)
     results.foreach(r =>
-      println(s"[extract] ${r.entity}: ${r.rows.map(n => s"$n rows").getOrElse(s"SKIPPED (${r.error.get})")}"))
+      println(s"[extract] ${r.entity}: ${r.rows.map(n => s"$n rows").getOrElse(s"SKIPPED (${r.error.get})")}" +
+        s", ${r.bytes} bytes, sink ${r.sinkMillis} ms"))
     spark.stop()
     if (results.forall(!_.ok)) sys.exit(1)
   }

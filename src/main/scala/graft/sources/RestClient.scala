@@ -16,8 +16,10 @@ import java.time.Duration
   * All fetching happens on the DRIVER (or a dedicated single-partition
   * task): API rate limits are global, so per-executor retry loops
   * would multiply pressure instead of shedding it (SURVEY.md §7.4).
-  * Parallelism starts AFTER ingestion, when the payload becomes a
-  * Dataset.
+  * Parallelism starts AFTER the fetch: `ExtractionJob.run` keeps every
+  * call on its calling thread, in spec order, and overlaps only the
+  * tabularize → write → count of already-fetched bodies, at most
+  * `min(specs, defaultParallelism)` of them in flight at once.
   */
 final case class RetryPolicy(
     maxRetries: Int = 3,                      // opendotaapi.py:47

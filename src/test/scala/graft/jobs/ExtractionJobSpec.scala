@@ -1,7 +1,12 @@
 package graft.jobs
 
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.functions.{col, lit, raise_error, when}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -25,6 +30,36 @@ class ExtractionJobSpec extends AnyFunSuite {
       RetryPolicy(maxRetries = 1, backoffMillis = 1), _ => ())
     new ExtractionJob(spark, client, new LakeWriter(root), "http://api.test")
   }
+
+  /** Serves `[{"id":0},…]` with `rows(url)` elements, recording each
+    * call's URL and thread, and whether two calls were ever in flight
+    * at once.
+    */
+  private final class RecordingTransport(rows: Map[String, Int]) extends Transport {
+    val calls = new ConcurrentLinkedQueue[(String, Thread)]()
+    private val inFlight = new AtomicInteger()
+    @volatile var overlapped = false
+    override def get(url: String, params: Map[String, String]): RestResponse = {
+      if (inFlight.incrementAndGet() > 1) overlapped = true
+      try {
+        calls.add(url -> Thread.currentThread())
+        Thread.sleep(2) // widen the window an overlapping call would need
+        rows.get(url).fold(RestResponse(404, ""))(n =>
+          RestResponse(200, (0 until n).map(i => s"""{"id":$i}""").mkString("[", ",", "]")))
+      } finally { inFlight.decrementAndGet(); () }
+    }
+  }
+
+  private val base = "http://api.test"
+
+  private def recordingJob(specs: Seq[EndpointSpec], root: String): (ExtractionJob, RecordingTransport) = {
+    val transport = new RecordingTransport(specs.zipWithIndex.map { case (s, i) => s.url(base) -> (i + 1) }.toMap)
+    val client = new RestClient(transport, RetryPolicy(maxRetries = 1, backoffMillis = 1), _ => ())
+    (new ExtractionJob(spark, client, new LakeWriter(root), base), transport)
+  }
+
+  private def extractThreads: Set[Thread] =
+    Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith("graft-extract-")).toSet
 
   private val specs = Seq(
     Endpoints.publicMatches,
@@ -76,5 +111,80 @@ class ExtractionJobSpec extends AnyFunSuite {
     job.run(Seq(Endpoints.publicMatches), "2026-08-01")
     job.run(Seq(Endpoints.publicMatches), "2026-08-01") // re-run same month
     assert(spark.read.parquet(s"$root/public_matches").count() == 6) // both months, no dupes
+  }
+
+  test("fetch is serial: every GET runs on the calling thread, in spec order, one at a time") {
+    val root = Files.createTempDirectory("lake").toString
+    val steps = (1 to 8).map(i => EndpointSpec(s"e$i", s"/e$i"))
+    val (job, transport) = recordingJob(steps, root)
+    val results = job.run(steps, "2026-08-01")
+
+    assert(results.map(_.entity) == steps.map(_.name))
+    assert(results.map(_.rows) == (1 to 8).map(n => Some(n.toLong)))
+    assert(results.forall(r => r.bytes > 0 && r.sinkMillis >= 0))
+    val calls = transport.calls.asScala.toSeq
+    assert(calls.map(_._1) == steps.map(_.url(base)))
+    assert(calls.forall(_._2 eq Thread.currentThread()))
+    assert(!transport.overlapped)
+    assert(extractThreads.isEmpty)
+  }
+
+  test("the fetch loop stops while P fetched bodies wait to be sunk") {
+    val root = Files.createTempDirectory("lake").toString
+    val p = spark.sparkContext.defaultParallelism
+    val gate = new CountDownLatch(1)
+    val entered = new AtomicInteger()
+    val steps = (1 to p + 3).map(i => EndpointSpec(s"e$i", s"/e$i", rawNormalize = Some { (s, body) =>
+      entered.incrementAndGet()
+      gate.await()
+      RestSource.readJson(s, body)
+    }))
+    val (job, transport) = recordingJob(steps, root)
+    val results = new AtomicReference[Seq[StepResult]]()
+    val caller = new Thread(() => results.set(job.run(steps, "2026-08-01")))
+    caller.setDaemon(true)
+    caller.start()
+    try {
+      val deadline = System.currentTimeMillis() + 60000L
+      while (entered.get < p && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      Thread.sleep(300) // room for a fetch that should not happen
+      assert(entered.get == p)
+      assert(transport.calls.size == p, "the fetch loop ran ahead of the sink slots")
+    } finally gate.countDown()
+    caller.join(120000L)
+    assert(!caller.isAlive)
+    assert(results.get.map(_.rows) == (1 to p + 3).map(n => Some(n.toLong)))
+    assert(transport.calls.asScala.forall(_._2 eq caller))
+  }
+
+  test("under overlap a failing normalization and a failing sink each fail alone") {
+    val root = Files.createTempDirectory("lake").toString
+    val steps = Seq(
+      EndpointSpec("a", "/a"),
+      EndpointSpec("bad_normalize", "/n", rawNormalize = Some((_, _) => throw new IllegalStateException("normalize boom"))),
+      EndpointSpec("b", "/b"),
+      EndpointSpec("bad_sink", "/s", rawNormalize = Some((s, _) =>
+        s.range(3).select(when(col("id") === 2, raise_error(lit("sink boom"))).otherwise(col("id")).as("id")))),
+      EndpointSpec("c", "/c"),
+      EndpointSpec("d", "/d"))
+    val (job, _) = recordingJob(steps, root)
+    val results = job.run(steps, "2026-08-01")
+
+    assert(results.map(_.entity) == steps.map(_.name))
+    assert(results.map(_.ok) == Seq(true, false, true, false, true, true))
+    assert(results(1).error.exists(_.contains("normalize boom")))
+    assert(results(1).bytes > 0) // fetched, then failed in the sink stage
+    Seq("a" -> 1, "b" -> 3, "c" -> 5, "d" -> 6).foreach { case (entity, n) =>
+      assert(spark.read.parquet(s"$root/$entity").count() == n, entity)
+    }
+    assert(extractThreads.isEmpty)
+  }
+
+  test("steps for the same entity sink in spec order") {
+    val root = Files.createTempDirectory("lake").toString
+    val steps = Seq(EndpointSpec("same", "/first"), EndpointSpec("other", "/other"), EndpointSpec("same", "/second"))
+    val (job, _) = recordingJob(steps, root)
+    assert(job.run(steps, "2026-08-01").forall(_.ok))
+    assert(spark.read.parquet(s"$root/same").count() == 3) // the second body replaced the first
   }
 }
